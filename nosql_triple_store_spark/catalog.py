@@ -40,8 +40,10 @@ BROADCAST_TABLES = {"region", "nation"}
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, normalizing types for determinism.
 
-    events.ts arrives as INT64 TIMESTAMP(NANOS) parquet which Spark cannot
-    map natively; with ``nanosAsLong`` it reads as long, and we convert to
+    The shipped fixtures store events.ts as INT64 TIMESTAMP(MICROS),
+    which Spark reads natively. The bigint branch handles files that
+    store nanoseconds instead: Spark cannot map INT64 TIMESTAMP(NANOS),
+    so with ``nanosAsLong`` it reads as long, and we convert to
     timestamp_ntz truncated to µs — exactly matching DuckDB's
     ``CAST(ts AS TIMESTAMP)`` so differential oracles compare equal.
     """

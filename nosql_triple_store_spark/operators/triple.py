@@ -28,9 +28,9 @@ from ..catalog import load_table
 from ..functions.lww import latest_by_key, lww_merge
 from ..registry import register
 
-# Shared DuckDB-side normalization: events.ts is ns-precision in parquet;
-# CAST to TIMESTAMP truncates to µs, matching the Spark-side conversion in
-# catalog.load_table.
+# Shared DuckDB-side normalization: CAST to TIMESTAMP truncates an
+# ns-precision events.ts to µs (the shipped fixtures already store µs),
+# matching the Spark-side conversion in catalog.load_table.
 E_CTE = (
     "WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,"
     " event_type, value, props FROM events)"

@@ -74,19 +74,25 @@ def quads_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# quad_layout's on-disk schema: quads_view's (s, p, o) data columns,
+# then the string partition column g, in the order a parquet read of a
+# partitionBy("g") directory returns them.
+QUADS_SCHEMA = "s string, p string, o string, g string"
+
 _QUAD_DIRS: dict[str, str] = {}
 
 
 def quad_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quad view materialized as graph-partitioned scratch parquet
     (once per process). GRAPH-constant queries prune ``g=`` partition
-    directories; the partition column is virtual (no storage cost)."""
+    directories; the partition column is virtual (no storage cost).
+    Read with QUADS_SCHEMA, so a call submits no footer-inference job."""
     if sf_dir not in _QUAD_DIRS:
-        from ..scratch import scratch_dir
+        from ..scratch import check_declared, scratch_dir
 
         out = scratch_dir("quads", sf_dir)
-        quads_view(spark, sf_dir).write.mode("overwrite").partitionBy(
-            "g"
-        ).parquet(out)
+        quads = quads_view(spark, sf_dir)
+        check_declared(quads, QUADS_SCHEMA)
+        quads.write.mode("overwrite").partitionBy("g").parquet(out)
         _QUAD_DIRS[sf_dir] = out
-    return spark.read.parquet(_QUAD_DIRS[sf_dir])
+    return spark.read.schema(QUADS_SCHEMA).parquet(_QUAD_DIRS[sf_dir])

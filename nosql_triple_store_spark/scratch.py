@@ -24,6 +24,9 @@ import shutil
 import tempfile
 import time
 
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
 # Every scratch path this process hands out is removed at interpreter
 # exit (retention policy: scratch lives exactly as long as the process
 # that created it — lazily-returned DataFrames are always collected
@@ -54,6 +57,22 @@ def scratch_dir(kind: str, sf_dir: str) -> str:
     path = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}", tag)
     _CREATED.append(path)
     return path
+
+
+def check_declared(df: DataFrame, ddl: str) -> None:
+    """Raise unless ``df`` carries exactly the columns and types of
+    ``ddl``, the schema its scratch layout is reread with.
+
+    ``spark.read.schema(ddl)`` does not catch every drift on its own:
+    it widens an int column to long and returns nulls for a renamed
+    one. Writers call this before writing, so a drifted layout fails
+    at build time. Analysis only, no Spark job."""
+    want = {f.name: f.dataType for f in StructType.fromDDL(ddl)}
+    if {f.name: f.dataType for f in df.schema} != want:
+        raise ValueError(
+            f"layout schema {df.schema.simpleString()} drifted from "
+            f"its declaration {ddl!r}"
+        )
 
 
 def persistent_artifact_path(kind: str, sf_dir: str, name: str) -> str:

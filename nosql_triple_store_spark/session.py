@@ -6,8 +6,9 @@ The same builder settings are intended for a 1000-executor cluster; only
 - AQE on (coalesce shuffle partitions, skew-join splitting, dynamic join
   selection) so plans re-optimize at runtime at any scale.
 - Arrow enabled for the few Pandas-UDF paths (multimodal decode).
-- ``nanosAsLong`` so the driver-generated ns-precision parquet is readable;
-  the catalog converts to timestamp_ntz (see catalog.py).
+- ``nanosAsLong`` so parquet storing ns-precision timestamps is readable
+  (the shipped fixtures store µs); the catalog converts to timestamp_ntz
+  (see catalog.py).
 """
 
 from __future__ import annotations

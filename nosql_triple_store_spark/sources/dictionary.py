@@ -76,6 +76,15 @@ def assign_dense_ids(
     )
 
 
+# The encoded store's on-disk layout, declared once: build_dictionary
+# writes DICTIONARY_SCHEMA, the encoded store (relational_ext3.
+# encoded_store) writes ENCODED_TRIPLES_SCHEMA, and its readers pass
+# both to spark.read.schema, so no query pays a footer-inference job
+# to rediscover them.
+DICTIONARY_SCHEMA = "term_id long, term string"
+ENCODED_TRIPLES_SCHEMA = "s long, p long, o long"
+
+
 def build_dictionary(
     triples: DataFrame, ids: str = "dense", n_parts: int | None = None
 ) -> DataFrame:

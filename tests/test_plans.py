@@ -223,3 +223,44 @@ def test_bgp_encoded_reads_materialized_store(spark):
     assert "xxhash64" not in p  # no in-plan dictionary build
     # encoded triples come off a columnar scan, joins run on longs
     assert "Scan parquet" in p
+
+    # the readers trust the declared schemas instead of inferring the
+    # footers, so the files the writers leave must carry exactly them
+    from pyspark.sql.types import StructType
+
+    from nosql_triple_store_spark.operators.relational_ext3 import (
+        _ENC_STORE_DIRS,
+    )
+    from nosql_triple_store_spark.plans.quads import (
+        _QUAD_DIRS,
+        QUADS_SCHEMA,
+        quad_layout,
+    )
+    from nosql_triple_store_spark.sources.dictionary import (
+        DICTIONARY_SCHEMA,
+        ENCODED_TRIPLES_SCHEMA,
+    )
+
+    quad_layout(spark, SF_DIR)
+    out_d, out_e = _ENC_STORE_DIRS[SF_DIR]
+    for ddl, path in (
+        (DICTIONARY_SCHEMA, out_d),
+        (ENCODED_TRIPLES_SCHEMA, out_e),
+        (QUADS_SCHEMA, _QUAD_DIRS[SF_DIR]),
+    ):
+        assert spark.read.parquet(path).schema == StructType.fromDDL(ddl), (
+            path
+        )
+
+    # a schema read would widen int ids and null a renamed column, so
+    # the writers refuse a frame that drifts from its declaration
+    import pytest
+
+    from nosql_triple_store_spark.scratch import check_declared
+
+    for drifted in ("cast(id as int) term_id", "id AS tid"):
+        with pytest.raises(ValueError, match="drifted"):
+            check_declared(
+                spark.range(1).selectExpr(drifted, "'x' AS term"),
+                DICTIONARY_SCHEMA,
+            )

@@ -154,6 +154,32 @@ def test_sparql_runs_in_encoded_space(spark):
     assert "bgp_dict" in plan  # dictionary decode joins
 
 
+def test_compile_submits_only_the_dictionary_probe(spark):
+    """With the encoded store built, compiling a lookup submits exactly
+    one Spark job: the dictionary probe for its constants. The store
+    directories are read with their declared schemas, so no parquet
+    footer-inference job runs per query."""
+    from nosql_triple_store_spark.operators.relational_ext3 import (
+        encoded_store,
+    )
+    from nosql_triple_store_spark.plans.sparql import compile_sparql_encoded
+
+    encoded_store(spark, SF_DIR)  # built once per process, before timing
+    sc = spark.sparkContext
+    group = "test_compile_submits_only_the_dictionary_probe"
+    sc.setJobGroup(group, "compile one subject lookup")
+    try:
+        compile_sparql_encoded(
+            spark, SF_DIR, "SELECT ?p ?o WHERE { <customer:1> ?p ?o }"
+        )
+        # the status store is fed by the listener bus; drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(jobs) == 1, jobs
+
+
 def test_parse_aggregates():
     q = parse_sparql(
         "SELECT ?g (COUNT(*) AS ?n) (MIN(?x) AS ?lo) WHERE { ?x p ?g } "
