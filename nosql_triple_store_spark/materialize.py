@@ -25,14 +25,22 @@ deployment-selected via ``SPARK_GRAFT_CKPT_POLICY``:
 All three are EAGER (the loop/bench timing contract: the step is paid
 inside the step), and all three produce results byte-identical to
 ``localCheckpoint`` — the policy moves durability, never semantics.
+
+Capped iterative loops (CC, SCC, star contraction, k-core, SSSP, the
+``p+``/``p*`` path closure) run through :func:`fixpoint`, the single
+owner of the round cap and of the loud non-convergence error: a loop
+that hits its cap raises instead of returning a partial result.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
+
+_S = TypeVar("_S")
 
 _CKPT_DIR_SET: set[str] = set()  # app ids with a checkpoint dir configured
 
@@ -88,3 +96,17 @@ def lazy_cut(df: DataFrame) -> DataFrame:
     if policy == "disk":
         return df.persist(StorageLevel.DISK_ONLY)
     return df.localCheckpoint(eager=False)
+
+
+def fixpoint(
+    state: _S, step: Callable[[_S], tuple[_S, bool]], max_rounds: int, what: str
+) -> _S:
+    """Run ``state, done = step(state)`` until ``done`` and return the
+    final state. ``step`` owns the round's materialization and its
+    convergence action; reaching ``max_rounds`` rounds without ``done``
+    raises, since a loop cut short returns a wrong answer silently."""
+    for _ in range(max_rounds):
+        state, done = step(state)
+        if done:
+            return state
+    raise RuntimeError(f"{what} did not converge in {max_rounds} rounds")

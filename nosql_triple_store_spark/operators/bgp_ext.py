@@ -3,12 +3,13 @@ paths (`(p)+`), FILTER NOT EXISTS, and VALUES inline bindings — the three
 most-used SPARQL 1.1 features beyond plain BGPs (reference models RDF
 triples but has no path engine; SURVEY §2.B).
 
-Scale notes: the closure is semi-naive iteration — each round joins only
-the NEW frontier against the base relation (not the whole closure), the
-classic Datalog evaluation that keeps per-round shuffle volume
-proportional to newly-derived facts; rounds are O(longest path), lineage
-truncated per round. NOT EXISTS lowers to a left-anti join; VALUES to a
-broadcast hash join against a literal DataFrame."""
+Scale notes: the closure is the SPARQL compiler's semi-naive
+``_closure_rel`` — each round joins only the NEW frontier against the
+base relation (not the whole closure), the classic Datalog evaluation
+that keeps per-round shuffle volume proportional to newly-derived facts;
+rounds are O(longest path), lineage truncated per round. NOT EXISTS
+lowers to a left-anti join; VALUES to a broadcast hash join against a
+literal DataFrame."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.bgp import TRIPLES_SQL, triples_view
+from ..plans.sparql import _closure_rel
 from ..registry import register
 from ..materialize import materialize
 
@@ -39,37 +41,20 @@ def q_bgp_path_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     RECURSIVE over the same triples — a genuinely different fixpoint
     engine computing the same relation.
 
-    Each round: frontier ⋈ base (shuffle keyed on the hop column),
-    dedup against the accumulated closure (left-anti), stop when no new
-    pairs. Round count = longest simple path (2 in the fixture
-    hierarchy; capped at 12 with a non-convergence error, same contract
-    as q_graph_cc)."""
+    The closure is the SPARQL compiler's ``_closure_rel`` (the same
+    fixpoint behind textual `p+`/`p*`), run on the string-valued triples
+    renamed s/o -> src/dst. Round count = longest simple path (2 in the
+    fixture hierarchy; capped with a non-convergence error)."""
     t = triples_view(spark, sf_dir)
     base = (
         t.filter(F.col("p").isin("inNation", "inRegion"))
-        .select("s", "o")
+        .select(F.col("s").alias("src"), F.col("o").alias("dst"))
         .distinct()
         .transform(materialize)
     )
-    closure = base
-    frontier = base
-    converged = False
-    for _ in range(12):
-        step = (
-            frontier.alias("f")
-            .join(base.alias("b"), F.col("f.o") == F.col("b.s"))
-            .select(F.col("f.s").alias("s"), F.col("b.o").alias("o"))
-            .distinct()
-        )
-        new = step.join(closure, ["s", "o"], "left_anti").transform(materialize)
-        if new.isEmpty():
-            converged = True
-            break
-        closure = closure.unionByName(new).transform(materialize)
-        frontier = new
-    if not converged:
-        raise RuntimeError("path closure did not converge in 12 rounds")
-    return closure
+    return _closure_rel(base).select(
+        F.col("src").alias("s"), F.col("dst").alias("o")
+    )
 
 
 @register(

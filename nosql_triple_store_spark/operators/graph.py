@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..materialize import materialize
+from ..materialize import fixpoint, materialize
 
 _EDGES_SQL = """
 edges AS (
@@ -93,6 +93,39 @@ def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def min_label_propagation(
+    labels: DataFrame, edges: DataFrame, max_rounds: int, what: str
+) -> DataFrame:
+    """Propagate minimum labels to fixpoint: ``labels(node, label)`` has
+    one row per node, and each round a node takes the min of its own
+    label and the labels at the ``dst`` ends of its ``edges(src, dst)``,
+    so at the fixpoint every node holds the min label reachable from it
+    along the edges. The label column keeps its type (long component ids
+    for CC, string terms for SCC). One materialization and one count per
+    round; raises after ``max_rounds`` rounds without convergence."""
+    null_label = F.lit(None).cast(labels.schema["label"].dataType)
+
+    def step(labels: DataFrame) -> tuple[DataFrame, bool]:
+        neigh = edges.join(labels, edges.dst == labels.node).select(
+            F.col("src").alias("node"), "label"
+        )
+        # Carry the previous label through the aggregate (labels has
+        # exactly one row per node, so max(old) recovers it; neighbor
+        # rows contribute null) — the changed-count then reads the
+        # checkpointed result instead of paying a join per round.
+        stepped = (
+            labels.select("node", "label", F.col("label").alias("old"))
+            .unionByName(neigh.withColumn("old", null_label))
+            .groupBy("node")
+            .agg(F.min("label").alias("label"), F.max("old").alias("old"))
+            .transform(materialize)  # truncate lineage: plans stay O(1) per round
+        )
+        changed = stepped.filter(F.col("label") != F.col("old")).count()
+        return stepped.select("node", "label"), changed == 0
+
+    return fixpoint(labels, step, max_rounds, what)
+
+
 @register(
     "q_graph_cc",
     oracle="""
@@ -124,52 +157,18 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(materialize)  # loop invariant: one materialization, not one
     # union-of-parquet-scans replan per round (guide §2.4)
     nodes = (
-        e.select(F.col("src").alias("node_id"))
+        e.select(F.col("src").alias("node"))
         .union(e.select("dst"))
         .union(region.select(F.col("r_regionkey").cast("long")))
         .distinct()
     )
     labels = nodes.select(
-        "node_id", F.col("node_id").alias("component")
+        "node", F.col("node").alias("label")
     ).transform(materialize)  # round 1 otherwise recomputes the distinct twice
-    changed = -1
-    for _ in range(10):
-        neigh = (
-            e.join(labels, e.dst == labels.node_id)
-            .select(F.col("src").alias("node_id"), "component")
-        )
-        # Carry the previous label through the aggregate (labels has
-        # exactly one row per node, so max(oldc) recovers it; neighbor
-        # rows contribute null) — the changed-count then reads the
-        # checkpointed result instead of paying a join per round.
-        stepped = (
-            labels.select(
-                "node_id", "component", F.col("component").alias("oldc")
-            )
-            .unionByName(
-                neigh.withColumn("oldc", F.lit(None).cast("long"))
-            )
-            .groupBy("node_id")
-            .agg(
-                F.min("component").alias("component"),
-                F.max("oldc").alias("oldc"),
-            )
-            .transform(materialize)  # truncate lineage: plans stay O(1) per round
-        )
-        changed = stepped.filter(
-            F.col("component") != F.col("oldc")
-        ).count()
-        labels = stepped.select("node_id", "component")
-        if changed == 0:
-            break
-    if changed != 0:
-        # silent non-convergence would return wrong components
-        raise RuntimeError(
-            "connected components did not converge within 10 rounds "
-            "(graph diameter too large — raise the cap or switch to the "
-            "small-star/large-star variant)"
-        )
-    return labels
+    labels = min_label_propagation(labels, e, 10, "connected components")
+    return labels.select(
+        F.col("node").alias("node_id"), F.col("label").alias("component")
+    )
 
 
 _TRIANGLE_ORACLE = """

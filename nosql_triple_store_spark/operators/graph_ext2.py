@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from .graph import _edges
-from ..materialize import lazy_cut
+from ..materialize import fixpoint, lazy_cut
 
 
 def _oriented(e: DataFrame) -> DataFrame:
@@ -97,22 +97,17 @@ def star_fixpoint(edges: DataFrame, what: str, max_rounds: int = 12) -> DataFram
     separate isEmpty action. Convergence semantics identical: stop when
     the (count, xor) digest repeats."""
     e = _oriented(edges).transform(lazy_cut)
-    prev = _edge_digest(e)  # one job: checkpoint blocks + digest
-    converged = prev[0] == 0  # n == 0 <=> no edges
-    for _ in range(max_rounds):
-        if converged:
-            break
+    digest = _edge_digest(e)  # one job: checkpoint blocks + digest
+    if digest[0] == 0:  # n == 0 <=> no edges
+        return e
+
+    def step(state):
+        e, prev = state
         e = _oriented(_small_star(_large_star(e))).transform(lazy_cut)
         cur = _edge_digest(e)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise RuntimeError(
-            f"{what}: star contraction did not reach an edge fixpoint "
-            f"in {max_rounds} rounds"
-        )
+        return (e, cur), cur == prev
+
+    e, _ = fixpoint((e, digest), step, max_rounds, f"{what}: star contraction")
     return e
 
 

@@ -11,7 +11,7 @@ from ..catalog import load_table
 from ..registry import register
 from ..scratch import scratch_dir
 from ..widths import wedge_width
-from ..materialize import materialize
+from ..materialize import fixpoint, materialize
 
 K_CORE = 4
 
@@ -100,8 +100,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = e0.unionByName(
         e0.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
     )
-    edges = sym
-    for _ in range(50):
+
+    def peel(edges: DataFrame) -> tuple[DataFrame, bool]:
         # one materialization of the degree table per round: it feeds
         # the two semi-joins and BOTH convergence counts (fused into a
         # single scalar aggregate — was two separate count actions)
@@ -116,15 +116,16 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("deg") >= K_CORE).cast("long")).alias("n_keep"),
         ).collect()[0]
         if row["n_keep"] == row["n_all"]:
-            break
+            return edges, True
         keep_b = keep.select(F.col("pa").alias("pb"))
         edges = (
             edges.join(keep, "pa", "left_semi")
             .join(keep_b, "pb", "left_semi")
             .transform(materialize)
         )
-    else:
-        raise RuntimeError("k-core peel did not converge in 50 rounds")
+        return edges, False
+
+    edges = fixpoint(sym, peel, 50, "k-core peel")
     deg_final = edges.groupBy("pa").agg(F.count(F.lit(1)).alias("core_deg"))
     return deg_final.select(
         F.col("pa").alias("part_id"), "core_deg"

@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..materialize import materialize
+from ..materialize import fixpoint, materialize
+from .graph import min_label_propagation
 
 # transition digraph, distinct non-loop directed edges (a, b): strings
 _DIGRAPH_SQL = """
@@ -173,92 +174,70 @@ def q_graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     u and u reaches m, and m is provably the SCC's minimum member);
     assign those, delete them, repeat on the remainder. Deleting whole
     SCCs never splits another SCC, so each outer round is sound; both
-    label fixpoints raise on non-convergence rather than returning
-    wrong components (graph.py:150 convention). SCC id = min member
-    label, which the oracle derives independently via a recursive
+    label fixpoints and the outer loop raise on non-convergence rather
+    than returning wrong components (materialize.fixpoint). SCC id = min
+    member label, which the oracle derives independently via a recursive
     transitive closure + mutual-reachability join.
 
     Scale: each inner round is one join + hash-min aggregation with
-    localCheckpoint lineage truncation — the PageRank/CC loop shape.
+    localCheckpoint lineage truncation — graph.min_label_propagation,
+    the same loop as q_graph_cc.
     Outer rounds are bounded by the SCC condensation's depth in
     practice (real session graphs: 1-3 giant SCCs plus stragglers);
     the cap raises rather than silently under-merging.
     """
-    edges0 = _digraph(spark, sf_dir).transform(materialize)
+    edges0 = (
+        _digraph(spark, sf_dir)
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .transform(materialize)
+    )
     nodes = (
-        edges0.select(F.col("a").alias("node"))
-        .union(edges0.select("b"))
+        edges0.select(F.col("src").alias("node"))
+        .union(edges0.select("dst"))
         .distinct()
     )
 
-    def _min_label_fixpoint(nodes_df: DataFrame, e: DataFrame) -> DataFrame:
-        """labels(node, lab): min label reachable along e's direction."""
-        labels = nodes_df.select("node", F.col("node").alias("lab"))
-        changed = -1
-        for _ in range(_SCC_INNER):
-            neigh = e.join(
-                labels, e.b == labels.node
-            ).select(F.col("a").alias("node"), "lab")
-            # carry the previous label through the aggregate (one
-            # labels row per node, so max(oldl) recovers it) — the
-            # changed-count reads the checkpointed result instead of
-            # paying a join per round (same fusion as q_graph_cc)
-            stepped = (
-                labels.select("node", "lab", F.col("lab").alias("oldl"))
-                .unionByName(
-                    neigh.withColumn(
-                        "oldl", F.lit(None).cast("string")
-                    )
-                )
-                .groupBy("node")
-                .agg(
-                    F.min("lab").alias("lab"),
-                    F.max("oldl").alias("oldl"),
-                )
-                .transform(materialize)
-            )
-            changed = stepped.filter(
-                F.col("lab") != F.col("oldl")
-            ).count()
-            labels = stepped.select("node", "lab")
-            if changed == 0:
-                break
-        if changed != 0:
-            raise RuntimeError(
-                "SCC label propagation did not converge within "
-                f"{_SCC_INNER} rounds"
-            )
-        return labels
-
-    assigned: DataFrame | None = None
-    remaining, edges = nodes.transform(materialize), edges0
-    for _ in range(_SCC_OUTER):
-        fwd = _min_label_fixpoint(remaining, edges)
-        bwd = _min_label_fixpoint(
-            remaining,
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b")),
+    def _reach_min(remaining: DataFrame, e: DataFrame) -> DataFrame:
+        """(node, label): min label reachable along e's direction."""
+        return min_label_propagation(
+            remaining.select("node", F.col("node").alias("label")),
+            e,
+            _SCC_INNER,
+            "SCC label propagation",
         )
-        done = (
+
+    def outer(state):
+        assigned, remaining, edges = state
+        fwd = _reach_min(remaining, edges)
+        bwd = _reach_min(
+            remaining,
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        )
+        scc = (
             fwd.alias("f")
             .join(bwd.alias("g"), "node")
-            .filter(F.col("f.lab") == F.col("g.lab"))
-            .select("node", F.col("f.lab").alias("scc_id"))
+            .filter(F.col("f.label") == F.col("g.label"))
+            .select("node", F.col("f.label").alias("scc_id"))
             .transform(materialize)
         )
-        assigned = done if assigned is None else assigned.unionByName(done)
-        remaining = remaining.join(done, "node", "left_anti").transform(materialize)
+        assigned = scc if assigned is None else assigned.unionByName(scc)
+        remaining = remaining.join(scc, "node", "left_anti").transform(materialize)
         if remaining.limit(1).count() == 0:
-            break
+            return (assigned, remaining, edges), True
         edges = (
-            edges.join(remaining.withColumnRenamed("node", "a"), "a")
-            .join(remaining.withColumnRenamed("node", "b"), "b")
-            .select("a", "b")
+            edges.join(remaining.withColumnRenamed("node", "src"), "src")
+            .join(remaining.withColumnRenamed("node", "dst"), "dst")
+            .select("src", "dst")
             .transform(materialize)
         )
-    else:
-        raise RuntimeError(
-            f"SCC coloring did not finish within {_SCC_OUTER} outer rounds"
-        )
+        return (assigned, remaining, edges), False
+
+    assigned, _, _ = fixpoint(
+        (None, nodes.transform(materialize), edges0),
+        outer,
+        _SCC_OUTER,
+        "SCC coloring",
+    )
     return assigned.groupBy("scc_id").agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.max("node").alias("max_node"),

@@ -20,7 +20,7 @@ from ..registry import register
 from .graph_ext3 import _copurchase_edges
 from .relational_ext12 import csv_orders
 from .triple import E_CTE
-from ..materialize import materialize
+from ..materialize import fixpoint, materialize
 
 SSSP_ROUND_CAP = 15
 
@@ -120,11 +120,8 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     old_shuffle = spark.conf.get(shuffle_key)
     spark.conf.set(shuffle_key, "8")
     try:
-        dist = spark.createDataFrame([(int(source), 0)], "node long, dist long")
-        frontier = dist
-        frontier_rows = 1
-        converged = False
-        for _ in range(SSSP_ROUND_CAP):
+        def relax(state):
+            dist, frontier, frontier_rows = state
             cand = _relax_candidates(frontier, frontier_rows, adj)
             # ONE union+min merge per round carries the previous
             # distance alongside (dist has one row per node, so
@@ -159,13 +156,10 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
             # convergence check AND next round's frontier-size estimate
             frontier_rows = frontier.count()
             dist = stepped.select("node", "dist")
-            if frontier_rows == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"SSSP did not converge in {SSSP_ROUND_CAP} rounds"
-            )
+            return (dist, frontier, frontier_rows), frontier_rows == 0
+
+        dist = spark.createDataFrame([(int(source), 0)], "node long, dist long")
+        dist, _, _ = fixpoint((dist, dist, 1), relax, SSSP_ROUND_CAP, "SSSP")
     finally:
         spark.conf.set(shuffle_key, old_shuffle)
     return dist

@@ -150,7 +150,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bgp import Term, Var, compile_bgp
-from ..materialize import lazy_cut, materialize
+from ..materialize import fixpoint, lazy_cut, materialize
 
 _TOKEN = re.compile(
     r"""
@@ -1355,9 +1355,8 @@ def _path_rel(enc: DataFrame, path, cmap) -> DataFrame:
     """Relational path algebra over the encoded triples: a path
     denotes a binary relation (src, dst). Pred is a pushed-down
     constant-predicate scan; Inv swaps; Alt unions; Seq equi-joins on
-    the hop; Plus is semi-naive transitive closure (frontier ⋈ base
-    per round, left-anti dedup, lineage cut per round, cap 12 — the
-    q_bgp_path_closure contract)."""
+    the hop; Plus is the semi-naive transitive closure
+    :func:`_closure_rel`."""
     if isinstance(path, PathPred):
         return enc.filter(
             F.col("p") == F.lit(int(cmap[path.name]))
@@ -1407,15 +1406,19 @@ def _path_rel(enc: DataFrame, path, cmap) -> DataFrame:
     raise ValueError(f"unknown path element {path!r}")
 
 
+_CLOSURE_ROUND_CAP = 12
+
+
 def _closure_rel(base: DataFrame) -> DataFrame:
     """Semi-naive transitive closure of a (src, dst) relation:
     frontier ⋈ base per round, left-anti dedup against the accumulated
-    closure, lineage cut per round, cap 12 — the q_bgp_path_closure
-    contract, shared by `p+` and `p*`."""
-    closure = base
-    frontier = base
-    for _ in range(12):
-        step = (
+    closure, lineage cut per round, stop when a round derives no new
+    pair, capped at ``_CLOSURE_ROUND_CAP`` rounds. The one closure
+    behind `p+`, `p*` and q_bgp_path_closure."""
+
+    def step(state):
+        closure, frontier = state
+        hop = (
             frontier.alias("f")
             .join(base.alias("b"), F.col("f.dst") == F.col("b.src"))
             .select(
@@ -1423,14 +1426,17 @@ def _closure_rel(base: DataFrame) -> DataFrame:
             )
             .distinct()
         )
-        new = step.join(
+        new = hop.join(
             closure, ["src", "dst"], "left_anti"
         ).transform(materialize)
         if new.isEmpty():
-            return closure
-        closure = closure.unionByName(new).transform(materialize)
-        frontier = new
-    raise RuntimeError("path closure did not converge in 12 rounds")
+            return state, True
+        return (closure.unionByName(new).transform(materialize), new), False
+
+    closure, _ = fixpoint(
+        (base, base), step, _CLOSURE_ROUND_CAP, "path closure"
+    )
+    return closure
 
 
 def _bind_path(rel: DataFrame, subj, obj, cmap) -> DataFrame:

@@ -198,13 +198,7 @@ def _load_operators() -> None:
     if _LOADED:
         return
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(f"{__package__}.{mod}")
-        except ModuleNotFoundError as e:
-            # Only tolerate a module that does not exist yet (build order);
-            # real import errors inside an existing module must surface.
-            if f"{mod.rsplit('.', 1)[-1]}" not in str(e):
-                raise
+        importlib.import_module(f"{__package__}.{mod}")
     _LOADED = True
 
 

@@ -154,6 +154,19 @@ def test_sparql_runs_in_encoded_space(spark):
     assert "bgp_dict" in plan  # dictionary decode joins
 
 
+def _jobs_in_fresh_group(spark, group, fn):
+    """Run ``fn()`` under a fresh job group; return its Spark job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        # the status store is fed by the listener bus; drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+
+
 def test_compile_submits_only_the_dictionary_probe(spark):
     """With the encoded store built, compiling a lookup submits exactly
     one Spark job: the dictionary probe for its constants. The store
@@ -165,19 +178,45 @@ def test_compile_submits_only_the_dictionary_probe(spark):
     from nosql_triple_store_spark.plans.sparql import compile_sparql_encoded
 
     encoded_store(spark, SF_DIR)  # built once per process, before timing
-    sc = spark.sparkContext
-    group = "test_compile_submits_only_the_dictionary_probe"
-    sc.setJobGroup(group, "compile one subject lookup")
-    try:
-        compile_sparql_encoded(
+    jobs = _jobs_in_fresh_group(
+        spark,
+        "test_compile_submits_only_the_dictionary_probe",
+        lambda: compile_sparql_encoded(
             spark, SF_DIR, "SELECT ?p ?o WHERE { <customer:1> ?p ?o }"
-        )
-        # the status store is fed by the listener bus; drain it first
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc._jsc.clearJobGroup()
+        ),
+    )
     assert len(jobs) == 1, jobs
+
+
+def test_path_plus_job_count_is_pinned(spark):
+    """Compiling and collecting a `p+` lookup (the benchmark's path
+    shape; two closure rounds on the fixture) submits a fixed number of
+    Spark jobs: the dictionary probe, the closure's per-round
+    materializations and emptiness probes, and the collect. A change
+    to the closure loop must not add an action per round."""
+    from nosql_triple_store_spark.operators.relational_ext3 import (
+        encoded_store,
+    )
+    from nosql_triple_store_spark.plans.sparql import compile_sparql_encoded
+
+    encoded_store(spark, SF_DIR)  # built once per process, before timing
+    q = "SELECT ?o WHERE { <customer:1> (inNation|inRegion)+ ?o }"
+    jobs = _jobs_in_fresh_group(
+        spark,
+        "test_path_plus_job_count_is_pinned",
+        lambda: compile_sparql_encoded(spark, SF_DIR, q).collect(),
+    )
+    assert len(jobs) == 16, jobs
+
+
+def test_path_closure_raises_at_its_round_cap(spark, monkeypatch):
+    """The fixture's location hierarchy needs two closure rounds, so a
+    cap of one must fail loudly instead of returning a partial closure."""
+    from nosql_triple_store_spark.plans import sparql
+
+    monkeypatch.setattr(sparql, "_CLOSURE_ROUND_CAP", 1)
+    with pytest.raises(RuntimeError, match="path closure did not converge"):
+        SPECS["q_bgp_path_closure"].fn(spark, SF_DIR)
 
 
 def test_parse_aggregates():
